@@ -167,26 +167,23 @@ def jaccard_pairs_from_capped(sh: DataFrame, threshold: float) -> DataFrame:
 
 
 def jaccard_pairs(sh: DataFrame, blocks: DataFrame, threshold: float,
-                  shingle_df_cap: int = DEFAULT_SHINGLE_DF_CAP,
-                  materialize: bool = True) -> DataFrame:
+                  shingle_df_cap: int = DEFAULT_SHINGLE_DF_CAP) -> DataFrame:
     """Pairwise Jaccard within blocks, inline. ``sh``: (doc_id, shingle);
     ``blocks``: (doc_id, block). Returns pairs ≥ threshold. Composition of
     :func:`capped_shingle_blocks` + :func:`jaccard_pairs_from_capped`; at
     cluster scale, materialize the capped table to PARQUET between the two
     instead (see :func:`capped_shingle_blocks`).
 
-    ``materialize=True`` (default) localCheckpoints the capped table
-    in-plan: :func:`jaccard_pairs_from_capped` consumes it THREE times
-    (both pair-join sides + the size denominators), so without it the
-    whole scan→normalize→shingle→window subtree runs 3-4× per action
-    (measured at sf0.1: 1.60 s → 1.34 s median with the checkpoint;
-    plan Exchanges 42 → 15). Same non-replicated-block caveat as
-    :func:`capped_band_candidates`; pass ``False`` when the input is
-    already a compact parquet scan."""
+    The capped table is localCheckpointed in-plan:
+    :func:`jaccard_pairs_from_capped` consumes it THREE times (both
+    pair-join sides + the size denominators), so without it the whole
+    scan→normalize→shingle→window subtree runs 3-4× per action (measured
+    at sf0.1: 1.60 s → 1.34 s median with the checkpoint; plan Exchanges
+    42 → 15). Same non-replicated-block caveat as
+    :func:`capped_band_candidates`."""
     capped = capped_shingle_blocks(sh, blocks, shingle_df_cap)
-    if materialize:
-        capped = capped.localCheckpoint(eager=False)
-    return jaccard_pairs_from_capped(capped, threshold)
+    return jaccard_pairs_from_capped(capped.localCheckpoint(eager=False),
+                                     threshold)
 
 
 def minhash_band_keys(sh: DataFrame, perms: list[tuple[int, int]],
@@ -438,25 +435,18 @@ def _normed_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def minhash_lsh_pairs(docs: DataFrame, id_col: str, text_col: str,
                       n_perm: int = 32, band_rows: int = 4,
                       threshold: float = 0.5, k: int = 3,
-                      seed: int = 42,
-                      materialize: bool = True) -> DataFrame:
+                      seed: int = 42) -> DataFrame:
     """Near-dup pairs, inline: shingle → band → candidates → verify in one
-    plan. The shingle table is localCheckpointed (``materialize=True``,
-    the same toggle contract as :func:`jaccard_pairs`): the verify stage
-    joins it twice and the size denominators read it once more on top of
-    the signature build — 4 evaluations of the scan→normalize→shingle
-    explode per action without the checkpoint (re-measured r11: 2.36 s →
-    2.23 s median at sf0.1, and the effect compounds at larger SFs where
-    the corpus re-scan dominates). At cluster scale, use
+    plan. The shingle table is localCheckpointed: the verify stage joins
+    it twice and the size denominators read it once more on top of the
+    signature build — 4 evaluations of the scan→normalize→shingle explode
+    per action without the checkpoint (re-measured r11: 2.36 s → 2.23 s
+    median at sf0.1, and the effect compounds at larger SFs where the
+    corpus re-scan dominates). At cluster scale, use
     :func:`materialize_minhash` + :func:`minhash_pairs_from_tables`
     instead — one corpus scan total, parquet-backed (replicated) tables."""
     sh = shingles(_normed_docs(docs, id_col, text_col), "doc_id", "norm",
-                  k=k)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
-    # the band-table checkpoint inside _lsh_candidate_verify predates the
-    # shingle checkpoint (r10) and is NOT governed by this toggle — the
-    # toggle isolates exactly the r11-added site for A/B attribution
+                  k=k).localCheckpoint(eager=False)
     bands = minhash_band_keys(sh, make_permutations(n_perm, seed), band_rows)
     return _lsh_candidate_verify(sh, bands, threshold)
 

@@ -204,7 +204,7 @@ STAGES = ("raw", "gated", "exact_dedup", "near_dup_canonical",
           "decontaminated", "sampled")
 
 
-def funnel(docs: DataFrame, materialize: bool = True) -> DataFrame:
+def funnel(docs: DataFrame) -> DataFrame:
     """The whole funnel as ONE single-pass plan: every document carries a
     survival flag per stage (the lineage instrumentation a production
     pipeline would emit anyway), and one conditional aggregate + unpivot
@@ -237,25 +237,23 @@ def funnel(docs: DataFrame, materialize: bool = True) -> DataFrame:
     round, so calling funnel() executes the shingle/Jaccard/clustering
     work up front even if the returned DataFrame is never collected.
 
-    Fault-tolerance trade (``materialize=True``, the jaccard_pairs toggle
-    contract — same caveat as stage_decontaminate's bench-side
-    checkpoint): localCheckpoint blocks live in NON-replicated executor
-    storage with truncated lineage, so an executor loss mid-job fails the
-    job (it restarts from the source) instead of recomputing the lost
-    blocks, and the blocks are freed by the ContextCleaner only when the
-    DataFrame is garbage-collected — a long-lived session calling
-    funnel() repeatedly while holding the results accumulates executor
-    storage. On a fault-prone cluster or in a session that keeps many
-    funnel results alive, pass ``materialize=False`` (recompute per
-    branch) or materialize the proxy to parquet instead."""
+    Fault-tolerance trade (same caveat as stage_decontaminate's
+    bench-side checkpoint): localCheckpoint blocks live in NON-replicated
+    executor storage with truncated lineage, so an executor loss mid-job
+    fails the job (it restarts from the source) instead of recomputing
+    the lost blocks, and the blocks are freed by the ContextCleaner only
+    when the DataFrame is garbage-collected — a long-lived session
+    calling funnel() repeatedly while holding the results accumulates
+    executor storage. On a fault-prone cluster or in a session that
+    keeps many funnel results alive, materialize the proxy to parquet
+    instead."""
     from .dedup import jaccard_pairs, shingles
 
     raw = stage_raw(docs)
     meta = raw.select("doc_id", "lang", "n_tokens",
                       gate_predicate().alias("in_gated"),
-                      F.md5(norm_text("text")).alias("content_hash"))
-    if materialize:
-        meta = meta.localCheckpoint(eager=False)
+                      F.md5(norm_text("text")).alias("content_hash")
+                      ).localCheckpoint(eager=False)
 
     keepers = (meta.filter("in_gated")
                .groupBy("content_hash")
@@ -273,8 +271,7 @@ def funnel(docs: DataFrame, materialize: bool = True) -> DataFrame:
     sh = shingles(normed, "doc_id", "norm")
     blocks = normed.select("doc_id",
                            F.substring("norm", 1, 16).alias("block"))
-    pairs = jaccard_pairs(sh, blocks, threshold=0.4,
-                          materialize=materialize) \
+    pairs = jaccard_pairs(sh, blocks, threshold=0.4) \
         .select("doc_id_1", "doc_id_2")
     comp = connected_components(pairs, "doc_id_1", "doc_id_2")
     flagged = (

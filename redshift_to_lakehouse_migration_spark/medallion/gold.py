@@ -32,6 +32,7 @@ from ..functions import (
     surrogate_key,
     tier_case,
 )
+from ..quality import fits_broadcast
 from ..scd2 import init_scd2
 
 COVERAGE_NAMES = {
@@ -273,8 +274,8 @@ def build_fact_claims_auto(spark: SparkSession, claims: DataFrame,
     builds (VERDICT r10 #5) — the measured SCALE.md #3 economics as an
     automatic policy instead of a doc the caller must read.
 
-    Decision rule, same Catalyst-estimate pattern as the referential-
-    integrity broadcast check (``quality._orphans``): when the POLICIES
+    Decision rule, :func:`quality.fits_broadcast` (the same predicate as
+    the referential-integrity broadcast check): when the POLICIES
     join input's optimizer size estimate fits the session broadcast
     budget, the claims⋈policies join is a BroadcastHashJoin — claims is
     never shuffled, so persisting a bucketed layout buys nothing and
@@ -284,23 +285,14 @@ def build_fact_claims_auto(spark: SparkSession, claims: DataFrame,
     layout wins 1.29x at 6M policies / 1.45x at 12M with breakeven
     under 2 rebuilds at the larger point — at nightly-refresh cadence
     it pays for itself on the first re-run.
-
-    An unavailable estimate falls back to the PLAIN build: it is the
-    side-effect-free choice (bucketing persists two managed tables), and
-    estimates are only unavailable for non-file relations where a silver
-    layout decision does not apply anyway.
     """
-    from ..quality import _estimated_plan_bytes, _session_broadcast_cap
-
     # Estimate the same projection the join consumes, not the full table:
     # column pruning reaches the scan, so the 7-column slice is what the
     # broadcast would actually hold.
     p = policies.select("policy_id", "property_id", "coverage_type_code",
                         "annual_premium", "deductible", "coverage_limit",
                         "agent_id")
-    cap = _session_broadcast_cap(p)
-    est = _estimated_plan_bytes(p)
-    if est is None or (cap > 0 and est <= cap):
+    if fits_broadcast(p):
         return build_fact_claims(claims, policies, properties)
     return build_fact_claims_bucketed(spark, claims, policies, properties,
                                       n_buckets=n_buckets,

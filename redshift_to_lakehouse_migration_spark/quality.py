@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tables import plan_bytes
+
 RESULT_SCHEMA = T.StructType([
     T.StructField("check_name", T.StringType(), False),
     T.StructField("table_name", T.StringType(), True),
@@ -251,15 +253,13 @@ def _session_broadcast_cap(df: DataFrame) -> int:
             f"{raw!r}; extend _session_broadcast_cap's suffix table")
 
 
-def _estimated_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes estimate for ``df``'s optimized plan —
-    driver-side metadata only (file sizes for parquet relations), no job.
-    None when the estimate is unavailable."""
-    try:
-        return int(str(df._jdf.queryExecution()
-                       .optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return None
+def fits_broadcast(df: DataFrame) -> bool:
+    """True when Catalyst's size estimate for ``df`` (:func:`plan_bytes`)
+    fits the session broadcast budget — the one predicate behind every
+    size-checked broadcast/pin/bucket choice. A disabled budget (-1)
+    never fits."""
+    cap = _session_broadcast_cap(df)
+    return cap > 0 and plan_bytes(df) <= cap
 
 
 def _orphans(df: DataFrame, column: str, ref_df: DataFrame,
@@ -280,9 +280,7 @@ def _orphans(df: DataFrame, column: str, ref_df: DataFrame,
     (ADVICE r5) — the graceful path for known-fact-sized references."""
     keys = ref_df.select(F.col(ref_column).alias(column)).distinct()
     if broadcast_ref is None:
-        cap = _session_broadcast_cap(ref_df)
-        est = _estimated_plan_bytes(ref_df)
-        broadcast_ref = cap > 0 and est is not None and est <= cap
+        broadcast_ref = fits_broadcast(ref_df)
     if broadcast_ref:
         keys = F.broadcast(keys)
     return (

@@ -88,64 +88,66 @@ for _m in _MODULES:
 # cheapest-first within each tier (r7 sf0.1 bench medians) so an early
 # driver timeout costs the fewest rows.
 DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
-    # -- r12 rotation (tools/staleness.py --suggest on the r12 tree):
-    #    the stale tier leads -- every query whose engine spans changed
-    #    this round (the size-adaptive spread() touches the whole
-    #    documents/embeddings-scanning surface, plus the materialize-
-    #    toggle dedup/curation/funnel sites and the components
-    #    consumers), cheapest-first within the tier; the remaining
-    #    slots are the least-recently-sampled fresh queries (newest
-    #    green round ASC) --
+    # -- rotation after the size-estimate consolidation (tools/
+    #    staleness.py --suggest on the edited tree): the stale tier
+    #    leads -- every query whose engine spans changed (the
+    #    plan_bytes/spread() rewrite touches the whole documents/
+    #    embeddings-scanning surface, plus the dedup/curation/funnel
+    #    sites whose dead checkpoint switches were removed; a dirty file
+    #    counts as changed in full, which also pulls in the sampling
+    #    and tables.py readers), cheapest-first within the tier; the
+    #    remaining slots are the least-recently-sampled fresh queries
+    #    (newest green round ASC) --
     "doc_fingerprint",
-    "text_stats",
     "token_count_bpe",
-    "lang_id",
-    "media_decode_stub",
-    "embedding_stats",
+    "text_stats",
     "token_histogram",
+    "lang_id",
+    "embedding_stats",
+    "pack_sequences",
+    "mix_datasets",
+    "media_decode_stub",
+    "pack_sequences_rows",
     "dedup_exact",
     "knn_bruteforce",
+    "sql_api_pricing_summary",
     "doc_repetition_filter",
-    "fuzzy_customer_pairs",
-    "dedup_embedding_cosine",
-    "knn_ivf",
     "ann_lsh_buckets",
-    "recon_global_aggregates",
-    "recon_metrics_unpivot",
-    "dedup_simhash",
-    "contamination_check",
-    "dedup_ngram_jaccard",
+    "knn_ivf",
     "knn_lsh_bucketed",
     "corpus_prep",
-    "price_percentiles",
+    "recon_global_aggregates",
+    "contamination_check",
+    "dedup_embedding_cosine",
+    "recon_metrics_unpivot",
+    "dedup_simhash",
     "agg_pricing_summary",
+    "fuzzy_customer_pairs",
+    "dedup_ngram_jaccard",
     "dedup_simhash_pairs",
-    "dedup_minhash_lsh",
     "knn_pq_adc",
+    "price_percentiles",
     "kmeans_clusters",
-    "dedup_clusters",
-    "knn_ivfpq_refined",
+    "dedup_minhash_lsh",
     "knn_ivfpq",
+    "knn_ivfpq_refined",
+    "dedup_clusters",
     "corpus_funnel",
-    "q10_returned_items",
-    "nation_market_share",
-    "audit_principal_last7d",
-    "q3_shipping_priority",
-    "audit_object_access",
-    "dim_customer",
-    "audit_anomalous_access",
-    "fact_lineitem",
-    "premium_payment_summary",
-    "market_basket_pairs",
-    "top_customers_by_revenue",
-    "part_brand_revenue",
-    "stg_customer",
-    "dim_date",
-    "frame_sample_plan",
-    "sample_stratified",
-    "binary_metadata",
-    "stg_orders",
-    "sample_per_stratum",
+    "dq_documents",
+    "events_daily_unique_users_hll",
+    "events_error_after_click",
+    "events_retention_cohorts",
+    "events_json_typed",
+    "events_rolling_hour_range",
+    "events_sessionized",
+    "events_daily_anomalies",
+    "events_daily_from_hourly",
+    "events_asof_purchase",
+    "events_conversion_funnel",
+    "customer_order_gaps",
+    "event_path_trigrams",
+    "q5_region_supplier_volume",
+    "masked_dim_customer_view",
 )
 
 _missing = [n for n in DRIVER_SAMPLE_PRIORITY if n not in QUERIES]

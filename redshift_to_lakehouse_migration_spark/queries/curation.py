@@ -65,8 +65,7 @@ def _gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def contamination_check(spark: SparkSession, sf_dir: str,
-                        bloom_fpp: float | None = None,
-                        materialize: bool = True) -> DataFrame:
+                        bloom_fpp: float | None = None) -> DataFrame:
     """Per-document benchmark contamination: distinct grams, grams shared
     with the benchmark set, and the contaminated flag.
 
@@ -102,11 +101,7 @@ def contamination_check(spark: SparkSession, sf_dir: str,
     # non-replicated-blocks trade as the shingle checkpoints
     # (llm/dedup.py): at cluster scale, a parquet-materialized gram
     # table (materialize_minhash-style) is the replicated path.
-    # ``materialize=False`` (the jaccard_pairs toggle contract) skips the
-    # checkpoint — for A/B attribution and for parquet-backed inputs.
-    base = _gram_arrays(spark, sf_dir)
-    if materialize:
-        base = base.localCheckpoint(eager=False)
+    base = _gram_arrays(spark, sf_dir).localCheckpoint(eager=False)
     is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench_grams = (base.filter(is_bench)
                    .select(F.explode("grams").alias("gram")).distinct())

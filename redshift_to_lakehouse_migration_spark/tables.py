@@ -72,18 +72,18 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 SPREAD_TEXT_MIN_BYTES_PER_CORE = 64 * 1024
 
 
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes estimate (driver-side metadata; file bytes
-    for parquet scans). None when unavailable."""
-    try:
-        return int(str(df._jdf.queryExecution()
-                       .optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return None
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate for ``df``'s optimized plan —
+    driver-side metadata only (file bytes for parquet scans), no job.
+    The single reader of this private stats path: if a Spark upgrade
+    moves it, this raises (and tests/test_functions.py's canary fails)
+    rather than silently changing any size-based decision."""
+    return int(str(df._jdf.queryExecution()
+                   .optimizedPlan().stats().sizeInBytes()))
 
 
 def spread(df: DataFrame, spark: SparkSession,
-           min_bytes_per_core: int | None = None) -> DataFrame:
+           min_bytes_per_core: int = 0) -> DataFrame:
     """Ensure at least ``defaultParallelism`` partitions before CPU-heavy
     per-row expressions (shingling, n-gram construction, signatures).
 
@@ -94,26 +94,23 @@ def spread(df: DataFrame, spark: SparkSession,
     thousands of partitions, so the condition never triggers and no
     shuffle is added.
 
-    ``min_bytes_per_core``: when set, skip the repartition entirely
-    while the input's size ESTIMATE stays under ``min_bytes_per_core ×
-    defaultParallelism`` — the scale-adaptive form for call sites whose
-    downstream work runs once (checkpoint-backed paths): under the floor
-    the shuffle's task-count-proportional fixed cost exceeds the
-    byte-proportional serial pass it parallelizes (measured crossover:
-    ``SPREAD_TEXT_MIN_BYTES_PER_CORE``). ``None`` keeps the
-    unconditional r6 behavior — right for sites whose per-row work is
+    ``min_bytes_per_core``: a non-zero floor skips the repartition
+    entirely while the input's size estimate (:func:`plan_bytes`) stays
+    under ``min_bytes_per_core × defaultParallelism`` — the form for
+    call sites whose downstream work runs once (checkpoint-backed
+    paths): under the floor the shuffle's task-count-proportional fixed
+    cost exceeds the byte-proportional serial pass it parallelizes
+    (measured crossover: ``SPREAD_TEXT_MIN_BYTES_PER_CORE``). The
+    default 0 reads no estimate — right for sites whose per-row work is
     extreme at ANY size (blocked Levenshtein, un-checkpointed text
-    analytics). An unavailable estimate falls through to the
-    unconditional path (never silently serialize). Skipping also avoids
-    the ~60 ms ``df.rdd`` partition-probe this function otherwise pays
-    per plan build. On a very large cluster the floor grows with the
-    core count, but a table that small needs no cluster-wide
-    parallelism, and genuinely large tables scan wide regardless."""
+    analytics). Skipping also avoids the ~60 ms ``df.rdd`` partition
+    probe this function otherwise pays per plan build. On a very large
+    cluster the floor grows with the core count, but a table that small
+    needs no cluster-wide parallelism, and genuinely large tables scan
+    wide regardless."""
     target = spark.sparkContext.defaultParallelism
-    if min_bytes_per_core is not None:
-        est = _estimated_bytes(df)
-        if est is not None and est < min_bytes_per_core * target:
-            return df
+    if min_bytes_per_core and plan_bytes(df) < min_bytes_per_core * target:
+        return df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

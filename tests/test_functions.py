@@ -4,6 +4,8 @@ assertions on each normalizer (`tests/test_silver_transforms.py:14-88`)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from redshift_to_lakehouse_migration_spark.functions import (
@@ -81,7 +83,8 @@ def test_spread_parallelizes_small_scans_only(spark):
     """spread(): single-partition inputs fan out to defaultParallelism;
     inputs already at/above it pass through unchanged (the cluster-scale
     no-op contract from SCALE.md)."""
-    from redshift_to_lakehouse_migration_spark.tables import spread
+    from redshift_to_lakehouse_migration_spark.tables import (
+        plan_bytes, spread)
     target = spark.sparkContext.defaultParallelism
     small = spark.range(100).coalesce(1)
     assert small.rdd.getNumPartitions() == 1
@@ -90,6 +93,23 @@ def test_spread_parallelizes_small_scans_only(spark):
     out = spread(big, spark)
     assert out.rdd.getNumPartitions() == target + 4
     assert out is big  # no extra shuffle inserted
+    # gated mode: an input whose estimate is under the floor stays bare
+    floor = plan_bytes(small) + 1
+    assert spread(small, spark, min_bytes_per_core=floor) is small
+    # ... while the default floor (0) still fans a 1-partition scan out
+    assert spread(small, spark, min_bytes_per_core=0) \
+        .rdd.getNumPartitions() == target
+
+
+def test_plan_bytes_reads_parquet_file_size(spark, sf_dir):
+    """Canary for the private Catalyst stats path every size-based choice
+    reads: a Spark upgrade that moves it must fail here, not silently
+    change broadcast/pin/spread decisions."""
+    from redshift_to_lakehouse_migration_spark.tables import plan_bytes
+    path = os.path.join(sf_dir, "documents.parquet")
+    est = plan_bytes(spark.read.parquet(path))
+    assert type(est) is int
+    assert est == os.path.getsize(path)
 
 
 def test_tune_for_session_applies_runtime_confs(spark):
