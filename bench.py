@@ -60,6 +60,14 @@ def _median(xs: list[float]) -> float:
     return round(mid, 3)
 
 
+def _codegen_compiles(spark) -> int:
+    """Generated classes compiled so far in this JVM (Spark's
+    ``CodegenMetrics``); a class served from the codegen cache adds
+    none."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
 FULL_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "BENCH_FULL_LATEST.json")
 # stdout budget: the BENCH recorder stores tail = stdout[-2000:]; the line
@@ -203,15 +211,20 @@ def main() -> None:
     # attributed only by alphabetical inference; with each entry's start
     # offset in the artifact, canary drift maps onto entries mechanically
     started: dict[str, float] = {}
+    # generated classes compiled during each entry's reps: after the
+    # first rep a warm codegen cache should compile (almost) nothing
+    compiles: dict[str, int] = {}
     subsec_reps = max(reps, 7)
     for name in sorted(QUERIES):
         started[name] = round(time.perf_counter() - run_start, 1)
+        c0 = _codegen_compiles(spark)
         runs = [run_once(name) for _ in range(reps)]
         if _median(runs) < 1.0:
             # sub-second tier: extend to a median of 7 — these entries'
             # cross-round deltas have repeatedly been host noise, and
             # 4 extra sub-second runs cost ~2 s each entry
             runs += [run_once(name) for _ in range(subsec_reps - len(runs))]
+        compiles[name] = _codegen_compiles(spark) - c0
         med = _median(runs)
         timings[name] = med
         spreads[name] = round((max(runs) - min(runs)) / med, 3) if med else 0.0
@@ -239,6 +252,7 @@ def main() -> None:
         datagen.generate(f"{tmp}/raw", n_policies=10_000, seed=42)
         started["medallion_pipeline_10k"] = round(
             time.perf_counter() - run_start, 1)
+        c0 = _codegen_compiles(spark)
         for rep in range(reps):
             t0 = time.perf_counter()
             pipe = build_medallion_pipeline(spark, f"{tmp}/raw",
@@ -248,6 +262,7 @@ def main() -> None:
             for df in outputs.values():  # execute every unmaterialized node
                 df.write.format("noop").mode("overwrite").save()
             pipeline_runs.append(time.perf_counter() - t0)
+        compiles["medallion_pipeline_10k"] = _codegen_compiles(spark) - c0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     pipeline_sec = _median(pipeline_runs)
@@ -263,6 +278,7 @@ def main() -> None:
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
     started["corpus_prep_pipeline"] = round(
         time.perf_counter() - run_start, 1)
+    c0 = _codegen_compiles(spark)
     for rep in range(reps):
         tmp2 = tempfile.mkdtemp(prefix="corpus_bench_")
         try:
@@ -273,6 +289,7 @@ def main() -> None:
         finally:
             shutil.rmtree(tmp2, ignore_errors=True)
     corpus_sec = _median(corpus_runs)
+    compiles["corpus_prep_pipeline"] = _codegen_compiles(spark) - c0
 
     canary_last = canary()
 
@@ -313,6 +330,9 @@ def main() -> None:
         "subsec_entries": len(sub),
         "subsec_spread_median": _median(list(sub.values())) if sub else 0.0,
         "subsec_spread_max": max(sub.values()) if sub else 0.0,
+        # generated classes compiled over each entry's reps (full
+        # artifact only, like spreads)
+        "codegen_compiles": compiles,
         "notes": (f"per-entry MEDIANS over {reps} runs (7 when sub-second)"
                   "; total covers every registered query plus TWO "
                   "materializing pipelines (medallion 10k, corpus prep); "

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -65,14 +64,18 @@ def build_medallion_pipeline(spark: SparkSession, raw_dir: str | Path,
             # Only a MISSING path may mean "first run": a readable-but-
             # corrupt or schema-drifted bronze dir must propagate, not
             # silently restart at batch 1 and append ambiguity (ADVICE r5).
-            try:
+            # Existence is asked of the path's Hadoop FileSystem (local
+            # disk and object stores alike): analyzing a missing path to
+            # catch PATH_NOT_FOUND made Spark's listener bus log an ERROR
+            # on every first run.
+            jpath = s._jvm.org.apache.hadoop.fs.Path(path)
+            fs = jpath.getFileSystem(s.sparkContext._jsc.hadoopConfiguration())
+            next_id = 1
+            if fs.exists(jpath):
                 prev = s.read.parquet(path) \
                     .agg(F.max("_batch_id")).collect()[0][0]
-                next_id = int(prev) + 1 if prev is not None else 1
-            except AnalysisException as e:
-                if e.getCondition() != "PATH_NOT_FOUND":
-                    raise
-                next_id = 1
+                if prev is not None:
+                    next_id = int(prev) + 1
             bronze.ingest_batch(s, str(raw_dir / f"raw_{table}.csv"),
                                 schema, path, batch_id=next_id)
             return s.read.parquet(path)

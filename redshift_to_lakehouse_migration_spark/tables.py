@@ -7,7 +7,11 @@ storage — Catalyst pushes filters/pruning into the parquet scan either way.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import tune_for_session
 
@@ -20,25 +24,76 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
 
+# Confs that change what footer inference returns for the same files.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# path -> (key, schema): one entry per distinct path read.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files_key(path: str) -> tuple | None:
+    """(name, inode, size, mtime_ns) of every file under ``path``, or None
+    when ``os.stat`` cannot see it (a missing path, an object-store URI)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_ino, st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for n in sorted(names):
+            f = os.path.join(root, n)
+            fs = os.stat(f)
+            files.append((f, fs.st_ino, fs.st_size, fs.st_mtime_ns))
+    return tuple(files)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema reused while
+    the files under ``path`` and the inference confs are unchanged.
+
+    Reading without a schema makes Spark run a footer-reading job, one
+    per read; a hit passes the recorded schema instead, so only that job
+    is skipped — files are still listed and every byte is still scanned
+    (measured per read at sf0.01, local[4], warm JVM: ~78 ms miss, ~14 ms
+    hit). A path ``os.stat`` cannot see always takes the plain read: a
+    missing path still raises Spark's PATH_NOT_FOUND, and an object-store
+    table gets its schema from its table format's log at scale."""
+    files = _files_key(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(k, None) for k in _INFER_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table. UTC session TZ is pinned so timestamp columns
     collect identically regardless of host timezone.
 
     The ``events`` table stores TIMESTAMP(NANOS), which different Spark
     versions surface differently: as a rejected type (older vectorized
-    reader — ``legacy.parquet.nanosAsLong`` reads it as bigint we rebuild
-    from), or as micro-truncated TIMESTAMP_NTZ (4.1+). Both are normalized
+    reader — ``legacy.parquet.nanosAsLong``, set once per session by
+    ``tune_for_session``, reads it as bigint we rebuild from), or as
+    micro-truncated TIMESTAMP_NTZ (4.1+). Both are normalized
     to a session-TZ TIMESTAMP here so every downstream query sees ONE type
     (unix_micros and friends reject NTZ) with the same micro-truncation
     DuckDB applies; with the UTC pin the wall-clock values are identical
     either way.
     """
     tune_for_session(spark)
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
         ts_type = dict(df.dtypes).get("ts")

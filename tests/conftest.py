@@ -53,9 +53,7 @@ _GUARD_KEYS = (
     "spark.sql.adaptive.enabled",
     "spark.sql.optimizer.excludedRules",
     "spark.sql.parser.escapedStringLiterals",
-    # NOT guarded: spark.sql.legacy.parquet.nanosAsLong — tables.load sets
-    # it to the constant "true" on every call (idempotent engine constant,
-    # never reverted), so the first load in any module would false-flag.
+    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.graft.confPinned",
     "spark.graft.sessionTuned",
 )

@@ -211,3 +211,101 @@ def test_davg_denominator_matches_nan_exclusion(spark):
     from redshift_to_lakehouse_migration_spark.functions import davg
     got = df.agg(davg("v").alias("m")).collect()[0].m
     assert got == 2.0   # (1+3)/2, NOT (1+3)/3
+
+
+def _jobs_submitted(spark) -> int:
+    """Jobs the DAGScheduler has handed out ids to in this context."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_load_infers_schema_once_per_file_version(spark, sf_dir):
+    """Footer inference is a Spark job per schemaless read; tables.load
+    pays it once while the file is unchanged, and the reused schema is
+    the inferred one."""
+    from redshift_to_lakehouse_migration_spark import tables
+    tables._SCHEMAS.pop(f"{sf_dir}/orders.parquet", None)
+    j0 = _jobs_submitted(spark)
+    first = tables.load(spark, sf_dir, "orders")
+    j1 = _jobs_submitted(spark)
+    second = tables.load(spark, sf_dir, "orders")
+    j2 = _jobs_submitted(spark)
+    assert (j1 - j0, j2 - j1) == (1, 0)
+    assert second.schema == first.schema
+    assert second.count() == first.count()
+
+
+def test_read_parquet_reinfers_after_overwrite(spark, tmp_path):
+    """A rewrite of the same path with another schema is a new file
+    version: the next read infers again instead of reusing the old
+    schema."""
+    from redshift_to_lakehouse_migration_spark.tables import read_parquet
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(3).selectExpr("id", "cast(id AS string) AS s") \
+        .write.mode("overwrite").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.dtypes == [("id", "bigint"), ("s", "string")]
+    assert sorted(r.s for r in df.collect()) == ["0", "1", "2"]
+
+
+def test_read_parquet_reinfers_when_inference_conf_changes(spark, tmp_path):
+    """binaryAsString changes the inferred type of the same file, so it is
+    part of the reuse key. The file comes from pyarrow: a Spark-written
+    footer carries Spark's own schema, which the conf does not touch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from redshift_to_lakehouse_migration_spark.tables import read_parquet
+    key = "spark.sql.parquet.binaryAsString"
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"0", b"1"], pa.binary())}),
+                   path)
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, path).dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, path).dtypes == [("b", "string")]
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def test_read_parquet_missing_path_raises_path_not_found(spark, tmp_path):
+    """A path os.stat cannot see takes Spark's own read, so a missing
+    table still fails with Spark's error, not a cache miss."""
+    import pytest as _pytest
+    from pyspark.errors import AnalysisException
+
+    from redshift_to_lakehouse_migration_spark.tables import read_parquet
+    with _pytest.raises(AnalysisException) as e:
+        read_parquet(spark, str(tmp_path / "missing.parquet"))
+    assert e.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_codegen_cache_keeps_a_query_compiled(spark, sf_dir):
+    """get_spark sizes Spark's generated-class cache past what a pass
+    compiles: a registry query re-run after 128 other generated classes
+    compiles nothing again. At Spark's default cap of 100 the filler
+    evicts the query's classes and the re-run compiles them all again
+    (measured: 35 of 35), so this fails if the cap is dropped or stops
+    reaching the JVM."""
+    from bench import _codegen_compiles
+    from redshift_to_lakehouse_migration_spark.queries import QUERIES
+
+    def run():
+        QUERIES["events_daily_unique_users_hll"](spark, sf_dir) \
+            .write.format("noop").mode("overwrite").save()
+
+    run()
+    for i in range(128):
+        # planning to an RDD compiles the stage's class without a job;
+        # the literal makes each class distinct
+        spark.range(1).selectExpr(f"id * {i} + {i} AS v") \
+            ._jdf.queryExecution().toRdd()
+    before = _codegen_compiles(spark)
+    run()
+    assert _codegen_compiles(spark) == before
